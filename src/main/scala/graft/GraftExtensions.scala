@@ -34,6 +34,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.RewriteBboxOverlapJoin)
     // whole-operator extension: two-phase heap top-k per group
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    // filter constants as codegen parameters: one compile per shape
+    ext.injectColumnar(_ => graft.plans.BindFilterConstants.Columnar)
   }
 }
 
@@ -69,7 +71,9 @@ object GraftExtensions {
 
   /** Register the engine functions + optimizer rule into an
     * already-running session (extensions proper can only be installed
-    * at session build time). */
+    * at session build time). The BindFilterConstants physical rule is
+    * build-time only: Spark fixes a session's columnar rules when it
+    * builds the session state. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     org.apache.spark.sql.graftbridge.GraftExpr
       .registerFunction(spark, "array_dot", arrayDotBuilder)

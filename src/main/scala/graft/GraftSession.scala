@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The library's front door: a SparkSession wired the way the engine
   * expects — UTC session time, AQE on, shuffle parallelism matched to
   * cores (not the 200 default), and the graft extensions (array_dot,
-  * bbox_overlaps, the bbox-join optimizer rule) installed.
+  * bbox_overlaps, the bbox-join optimizer rule, the filter-constant
+  * binding physical rule) installed.
   *
   *   val spark = GraftSession.local(32)          // local[32]
   *   // or on a cluster:

@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
   * scalars and datetimes → parquet row-group pushdown; sort+limit →
   * TakeOrderedAndProject. The GiST-index role is played by partition
   * + row-group pruning, which is what a 100 TB parquet catalog wants.
+  *
+  * Each search gets its own plan, but each search shape compiles once:
+  * the bbox edges, datetime bounds, cql2 numbers and keyset token
+  * values below are plain literals here, and the BindFilterConstants
+  * physical rule turns them into codegen parameters of the post-scan
+  * filter (the scan's pruning and pushdown keep the literals).
   */
 object CatalogQuery {
 

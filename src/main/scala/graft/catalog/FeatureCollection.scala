@@ -17,7 +17,10 @@ import org.apache.spark.sql.functions._
   * spliced in as a raw object. Only the ≤ limit page rows reach the
   * driver; the envelope and paging links are driver-side string
   * assembly over that bounded page, so response building never holds
-  * more than one page regardless of catalog size.
+  * more than one page regardless of catalog size. Each page runs its
+  * own plan, but pages of one search shape (any bbox, datetime, cql2
+  * numbers or token) share one generated class: see
+  * graft.plans.BindFilterConstants.
   */
 object FeatureCollection {
 

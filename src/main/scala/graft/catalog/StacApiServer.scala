@@ -30,7 +30,12 @@ import org.apache.spark.sql.DataFrame
   * compiles through CatalogQuery (one Catalyst plan per request:
   * partition pruning + parquet pushdown stand in for pgstac's GiST
   * index) and serializes through FeatureCollection (only one ≤ limit
-  * page is ever held on the driver). The server is a thin protocol
+  * page is ever held on the driver). Each request gets its own plan,
+  * but each search shape is compiled to Java once: BindFilterConstants
+  * (installed by GraftExtensions) makes the filter constants codegen
+  * parameters, so the generated class is shared the way a prepared
+  * statement is. The server turns on TCP_NODELAY for its connections
+  * (see [[StacApiServer.preferNoDelay]]). It is a thin protocol
   * adapter: parameter parsing in, Search out, Page back — so anything
   * the engine can answer, a real STAC client can now ask for over HTTP.
   */
@@ -64,6 +69,7 @@ class StacApiServer private (
     * URI, e.g. `http://127.0.0.1:49213`. */
   def start(port: Int = 0): String = {
     require(server == null, "already started")
+    preferNoDelay()
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", (ex: HttpExchange) => route(ex))
     // small fixed pool: each request runs a Spark action on the driver;
@@ -320,6 +326,17 @@ object StacApiServer {
 
   private val mapper =
     new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** TCP_NODELAY on accepted connections, unless the JVM was started
+    * with `sun.net.httpserver.nodelay` set either way. The JDK server
+    * flushes response headers as their own segment; under Nagle the
+    * body then waits for the client's delayed ACK of them, ~40 ms per
+    * response. The JDK reads the property once, when the JVM's first
+    * HttpServer is created, so this must run before that. */
+  private[graft] def preferNoDelay(): Unit = {
+    val key = "sun.net.httpserver.nodelay"
+    if (System.getProperty(key) == null) System.setProperty(key, "true")
+  }
 
   private val CollectionPath = "/collections/([^/]+)".r
   private val CollectionItemsPath = "/collections/([^/]+)/items".r

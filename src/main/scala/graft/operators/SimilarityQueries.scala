@@ -3407,7 +3407,7 @@ object SimilarityQueries {
     // cache the loop was about to materialize anyway.
     val gRow = e.agg(count(lit(1)), sum(size(col("emb")))).collect()(0)
     val cells = if (gRow.isNullAt(1)) 0L else gRow.getLong(1)
-    if (cells <= driverCellMax) {
+    if (cells < driverCellMax) {
       val rows = e.select(col("vec_id"), col("emb"), col("nrm"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,

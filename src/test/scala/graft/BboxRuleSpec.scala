@@ -26,17 +26,26 @@ class BboxRuleSpec extends SparkSpec {
       col("bw"), col("bs"), col("be"), col("bn")))
 
   test("marker predicate joins correctly without the rule (fallback)") {
-    val a = boxes(40, 1, "a")
-    val b = boxes(30, 2, "b")
-    val naive = a.join(b,
-      col("aw") <= col("be") && col("bw") <= col("ae") &&
-        col("as") <= col("bn") && col("bs") <= col("an"))
-      .select("aid", "bid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val marker = markerJoin(a, b).select("aid", "bid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(marker == naive)
-    assert(naive.nonEmpty)
+    // the shared session installs the rule through GraftExtensions;
+    // exclude it so the marker runs as the plain nested-loop predicate
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, graft.plans.RewriteBboxOverlapJoin.ruleName)
+    try {
+      val a = boxes(40, 1, "a")
+      val b = boxes(30, 2, "b")
+      val naive = a.join(b,
+        col("aw") <= col("be") && col("bw") <= col("ae") &&
+          col("as") <= col("bn") && col("bs") <= col("an"))
+        .select("aid", "bid").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val joined = markerJoin(a, b)
+      assert(joined.queryExecution.executedPlan.toString
+        .contains("BroadcastNestedLoopJoin"), "rule must not fire")
+      val marker = joined.select("aid", "bid").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(marker == naive)
+      assert(naive.nonEmpty)
+    } finally spark.conf.unset(excluded)
   }
 
   test("rule rewrites the join to equi-join with identical results") {

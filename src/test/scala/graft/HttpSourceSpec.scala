@@ -17,6 +17,10 @@ class HttpSourceSpec extends SparkSpec {
   private val TOKEN = "Bearer graft-test-token"
 
   private def withServer[A](f: Int => A): A = {
+    // the JDK reads its TCP_NODELAY switch once per JVM, at the first
+    // HttpServer.create: take the STAC server's setting, which
+    // StacApiSpec's latency case checks in this same test JVM
+    graft.catalog.StacApiServer.preferNoDelay()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val body: Array[Byte] = ("granule payload " * 100).getBytes("UTF-8")
     server.createContext("/data/", (ex: HttpExchange) => {

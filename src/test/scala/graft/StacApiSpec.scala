@@ -82,6 +82,19 @@ class StacApiSpec extends SparkSpec {
     assert(get("/no/such/route")._1 == 404)
   }
 
+  test("sequential requests do not wait on delayed ACKs (TCP_NODELAY)") {
+    // without TCP_NODELAY each response body waits ~40 ms for the
+    // client's delayed ACK of the separately flushed headers
+    assert(get("/conformance")._1 == 200)
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      assert(get("/conformance")._1 == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, s"median round trip $median ms: ${ms.mkString(", ")}")
+  }
+
   test("GET /search pages through next hrefs, disjoint and complete") {
     val total = items.count().toInt
     val limit = 7
